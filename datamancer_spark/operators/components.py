@@ -18,10 +18,20 @@ per-row driver logic. localCheckpoint truncates lineage each round.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..session import materialize
+
+
+def _observed_pin(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+    """``materialize(df)`` plus scalar aggregates over its rows, returned
+    as ``(pinned, {name: value})``. The metrics are observed by the
+    pin's own job, so a per-round scalar (a node count, a normalizer)
+    costs no extra job and no second copy of the pinned plan."""
+    obs = Observation()
+    pinned = materialize(df.observe(obs, *metrics))
+    return pinned, obs.get
 
 
 def _check_rounding_resolution(n: int, round_decimals: int | None) -> None:
@@ -44,6 +54,18 @@ def _check_rounding_resolution(n: int, round_decimals: int | None) -> None:
             "gate-scale differential runs — pass round_decimals=None at "
             "this node count."
         )
+
+
+def _node_set(e: DataFrame) -> tuple[DataFrame, int]:
+    """Pinned (node) set of a (u, v) edge list and its size, counted by
+    the pin's own job."""
+    nodes, m = _observed_pin(
+        e.select(F.col("u").alias("node"))
+        .unionByName(e.select(F.col("v").alias("node")))
+        .distinct(),
+        F.count(F.lit(1)).alias("n"),
+    )
+    return nodes, m["n"]
 
 
 def connected_components(
@@ -154,7 +176,8 @@ def pagerank(
     the node set, one 1-row dangling-mass crossJoin — all distributed;
     the driver loop is the documented fixed-count exception (same as
     ``connected_components``), with localCheckpoint truncating lineage
-    each round. Returns (node, rank).
+    each round. Returns (node, rank); an empty or all-NULL edge list
+    returns an empty frame.
 
     ``round_decimals``: round ranks after EVERY iteration. Float sums
     are association-order dependent at ~1e-16; per-iteration rounding
@@ -187,12 +210,11 @@ def pagerank(
         .na.drop()
         .distinct()
     )
-    nodes = materialize(
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
+    nodes, n = _node_set(e)
+    if n == 0:
+        # empty (or all-NULL) edge list: no nodes, so no ranks
+        out = nodes.select("node", F.lit(0.0).alias("rank"))
+        return (out, 0) if return_rounds else out
     _check_rounding_resolution(n, round_decimals)
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     ed = materialize(e.join(deg, "u"))
@@ -205,10 +227,11 @@ def pagerank(
     # + broadcast crossJoin): dm is exactly 0.0 every round there, and
     # x + 0.0 == x bit-exact for the non-negative rank sums, so the
     # iterates are bit-identical with or without the skipped term.
-    dangling_nodes = materialize(
-        nodes.join(deg, nodes.node == deg.u, "left_anti").select("node")
+    dangling_nodes, m = _observed_pin(
+        nodes.join(deg, nodes.node == deg.u, "left_anti").select("node"),
+        F.count(F.lit(1)).alias("n"),
     )
-    has_dangling = dangling_nodes.limit(1).count() > 0
+    has_dangling = m["n"] > 0
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     ranks = materialize(ranks)
     base = (1.0 - damping) / n
@@ -281,11 +304,19 @@ def hits(
     destinations; for crawl curation, hub pages are link farms to
     deprioritize, authority pages are content to keep). Per round:
     a ← normalize(Eᵀh), then h ← normalize(E a), each normalization a
-    division by the vector's SUM (one 1-row aggregate crossJoined back
-    — sum-normalization converges to the same ranking as L2 and keeps
-    the arithmetic sqrt-free for the differential twin). NULL edge
-    endpoints drop; nodes missing a side score 0 on it. Returns
-    (node, hub, auth).
+    division by the vector's SUM (sum-normalization converges to the
+    same ranking as L2 and keeps the arithmetic sqrt-free for the
+    differential twin). NULL edge endpoints drop; nodes missing a side
+    score 0 on it. Returns (node, hub, auth); an empty or all-NULL
+    edge list returns an empty frame.
+
+    Plan per half-round: ONE pin. The edge list joins the input vector,
+    each node adds a 0.0 term carrying its own row, and one groupBy(node)
+    sums both — so every node survives without a node-set join. The
+    pin's job also observes the sum of the raw scores, and the next
+    vector is the lazy projection raw / sum, so the normalizer costs no
+    second copy of the join. The second half-round carries the
+    authority vector, so the last pin already holds (node, hub, auth).
 
     Same engine-portability contract as ``pagerank``:
     ``round_decimals`` rounds both vectors after every iteration, so
@@ -294,79 +325,71 @@ def hits(
 
     ``tol`` / ``return_rounds`` (r12): same early-stop contract as
     ``pagerank`` — stop when the hub vector's max |Δ| per round is
-    ≤ tol (one aggregate → one driver scalar); ``iters`` becomes the
+    ≤ tol (one aggregate over the round's last pin, which carries the
+    previous hub vector → one driver scalar); ``iters`` becomes the
     cap."""
+    if int(iters) < 1:
+        raise ValueError(f"hits: iters must be >= 1 (got {iters})")
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .na.drop()
         .distinct()
     )
     e = materialize(e)
-    nodes = materialize(
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
+    nodes, n = _node_set(e)
+    if n == 0:
+        # empty (or all-NULL) edge list: no nodes, so no scores
+        out = nodes.select(
+            "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
+        )
+        return (out, 0) if return_rounds else out
     _check_rounding_resolution(n, round_decimals)
 
     def _rnd(c):
         return F.round(c, round_decimals) if round_decimals is not None else c
 
-    hubs = materialize(nodes.select("node", F.lit(1.0 / n).alias("hub")))
-    auths = None
+    zero = F.lit(0.0)
+
+    def _half(vec, score, on, to, out, carry):
+        """One half-round as one pin: push ``score`` along e from
+        endpoint ``on`` to ``to``, sum it per node, and divide by the
+        total that the pin's own job observes. Every node of ``vec``
+        also contributes one 0.0 term holding its ``carry`` columns,
+        so all nodes survive the aggregate (no node-set join) and the
+        carried values come through exactly (x + 0.0 == x)."""
+        pushed = e.join(vec, e[on] == vec.node).select(
+            F.col(to).alias("node"),
+            F.col(score).alias("_c"),
+            *(zero.alias(c) for c in carry),
+        )
+        kept = vec.select("node", zero.alias("_c"), *carry)
+        pin, m = _observed_pin(
+            pushed.unionByName(kept)
+            .groupBy("node")
+            .agg(F.sum("_c").alias("_s"), *(F.sum(c).alias(c) for c in carry)),
+            F.sum("_s").alias("t"),
+        )
+        return pin.select(
+            "node", _rnd(F.col("_s") / F.lit(m["t"])).alias(out), *carry
+        )
+
+    # with tol, each round's input hub vector rides both pins as _prev,
+    # so the convergence check reads one pin instead of joining two
+    prev = ["_prev"] if tol is not None else []
+    hubs = nodes.select("node", F.lit(1.0 / n).alias("hub"))
     rounds_run = 0
     for _ in range(int(iters)):
-        raw_a = (
-            e.join(hubs, e.u == hubs.node)
-            .groupBy("v")
-            .agg(F.sum("hub").alias("_s"))
-        )
-        a_tot = raw_a.agg(F.sum("_s").alias("_t"))
-        auths = materialize(
-            nodes.join(raw_a, nodes.node == raw_a.v, "left")
-            .crossJoin(F.broadcast(a_tot))
-            .select(
-                "node",
-                _rnd(
-                    F.coalesce(F.col("_s"), F.lit(0.0)) / F.col("_t")
-                ).alias("auth"),
-            )
-        )
-        raw_h = (
-            e.join(auths, e.v == auths.node)
-            .groupBy("u")
-            .agg(F.sum("auth").alias("_s"))
-        )
-        h_tot = raw_h.agg(F.sum("_s").alias("_t"))
-        prev_hubs = hubs
-        hubs = materialize(
-            nodes.join(raw_h, nodes.node == raw_h.u, "left")
-            .crossJoin(F.broadcast(h_tot))
-            .select(
-                "node",
-                _rnd(
-                    F.coalesce(F.col("_s"), F.lit(0.0)) / F.col("_t")
-                ).alias("hub"),
-            )
-        )
+        vec = hubs.select("node", "hub", *(F.col("hub").alias(c) for c in prev))
+        auths = _half(vec, "hub", "u", "v", "auth", prev)
+        hubs = _half(auths, "auth", "v", "u", "hub", ["auth", *prev])
         rounds_run += 1
         if tol is not None:
-            delta = (
-                hubs.join(
-                    prev_hubs.select(
-                        "node", F.col("hub").alias("_prev")
-                    ),
-                    "node",
-                )
-                .agg(
-                    F.max(F.abs(F.col("hub") - F.col("_prev"))).alias("d")
-                )
-                .collect()[0]["d"]
-            )
+            delta = hubs.agg(
+                F.max(F.abs(F.col("hub") - F.col("_prev"))).alias("d")
+            ).collect()[0]["d"]
             if delta is not None and delta <= tol:
                 break
-    out = hubs.join(auths, "node").select("node", "hub", "auth")
+    out = hubs.select("node", "hub", "auth")
     if return_rounds:
         return out, rounds_run
     return out

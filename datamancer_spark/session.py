@@ -102,7 +102,13 @@ def materialize(df, eager: bool = True):
     executor kills the job because the blocks are unrecoverable. For
     fault-tolerant 100 TB runs call ``set_checkpoint_dir(spark, path)``
     (HDFS/S3) once per session and every engine materialization point
-    upgrades to reliable storage automatically."""
+    upgrades to reliable storage automatically.
+
+    Metrics observed on ``df`` (``df.observe(Observation(), ...)``) ride
+    the eager pin's own job, under either checkpoint kind, so a scalar
+    of the pinned rows costs no extra job. A lazy pin (``eager=False``)
+    runs no job here, and ``Observation.get`` then blocks until some
+    later action executes the pinned plan."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)

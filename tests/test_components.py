@@ -1,5 +1,7 @@
 """Connected components + canonical dedup."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -234,6 +236,122 @@ def test_hits_early_stop_matches_fixed_at_convergence(spark):
     got = {r["node"]: (r["hub"], r["auth"]) for r in early.collect()}
     assert got == fixed
     assert rounds < 40, "early stop never fired"
+
+
+def _range_graph(spark, n):
+    """The catalog's hits_links graph shape (two doc_id-arithmetic
+    out-edges per node) over spark.range, so the planner sees the same
+    size estimates as on the parquet-backed catalog query."""
+    ids = spark.range(n)
+    return ids.select(
+        F.col("id").alias("src"), ((F.col("id") * 7 + 1) % n).alias("dst")
+    ).unionByName(
+        ids.select(
+            F.col("id").alias("src"), ((F.col("id") * 13 + 5) % n).alias("dst")
+        )
+    )
+
+
+def _jobs_in(spark, group, fn):
+    """(fn's result, number of Spark jobs fn fired), counted from the
+    status tracker under a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_hits_one_pin_per_half_round(spark, monkeypatch):
+    """Each HITS half-round is one pin whose own job observes the
+    normalizer: k rounds fire at most 2k·3 + 6 jobs, no pin has a
+    nested-loop join for a 1-row total or a second copy of the
+    edge-vector join and aggregate, and the output is a projection of
+    the last pin (one action job, no join)."""
+    from datamancer_spark.operators import components as C
+
+    edges = _range_graph(spark, 30)
+    for k in (1, 3):
+        out, n_jobs = _jobs_in(
+            spark, f"hits-budget-{k}",
+            lambda: C.hits(edges, iters=k, round_decimals=6),
+        )
+        assert n_jobs <= 2 * k * 3 + 6, (k, n_jobs)
+    _, action_jobs = _jobs_in(spark, "hits-action", out.collect)
+    assert action_jobs == 1
+    assert "Join" not in out._jdf.queryExecution().executedPlan().toString()
+
+    plans = []
+    pin = C.materialize
+
+    def recording(df, eager=True):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return pin(df, eager)
+
+    monkeypatch.setattr(C, "materialize", recording)
+    C.hits(edges, iters=2, round_decimals=6)
+    halves = [p for p in plans if "partial_sum(_c" in p]
+    assert len(halves) == 4, plans
+    for p in halves:
+        assert "NestedLoopJoin" not in p, p
+        assert len(re.findall(r"\w+Join \[", p)) == 1, p
+        assert p.count("partial_sum(_c") == 1, p
+        assert "CollectMetrics" in p, p
+
+
+@pytest.mark.parametrize("rows", [[], [(None, 1), (2, None), (None, None)]])
+def test_link_scores_on_empty_graph(spark, rows):
+    """An empty or all-NULL edge list has no nodes: both link scores
+    return an empty, typed frame (rounds_run 0), not a
+    ZeroDivisionError from the uniform 1/n start."""
+    from pyspark.sql.types import DoubleType, LongType
+
+    from datamancer_spark.operators.components import hits, pagerank
+
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    out, rounds = hits(edges, iters=3, round_decimals=6, return_rounds=True)
+    assert rounds == 0 and out.collect() == []
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        ("node", LongType()), ("hub", DoubleType()), ("auth", DoubleType())
+    ]
+    with pytest.raises(ValueError, match="iters"):
+        hits(edges, iters=0)
+    out, rounds = pagerank(edges, iters=3, return_rounds=True)
+    assert rounds == 0 and out.collect() == []
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        ("node", LongType()), ("rank", DoubleType())
+    ]
+
+
+def test_link_scores_under_reliable_checkpoints(spark, tmp_path):
+    """set_checkpoint_dir upgrades every pin to checkpoint(eager=True);
+    the per-pin Observations (HITS normalizers, node and dangling
+    counts) must arrive through that path too, with the same output
+    as the localCheckpoint default."""
+    from datamancer_spark import set_checkpoint_dir
+    from datamancer_spark.operators.components import hits, pagerank
+
+    edges = _range_graph(spark, 30).unionByName(
+        spark.createDataFrame([(3, 40), (5, 41)], "src long, dst long")
+    )
+
+    def run():
+        return (
+            sorted(map(tuple, hits(edges, iters=3, round_decimals=6).collect())),
+            sorted(map(tuple, pagerank(edges, iters=3, round_decimals=6).collect())),
+        )
+
+    local = run()
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    set_checkpoint_dir(spark, str(tmp_path / "ck"))
+    try:
+        assert run() == local
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
 
 
 class TestKCore:

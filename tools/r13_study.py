@@ -12,7 +12,10 @@
    (ids offset per copy; text salted so near-dup structure stays
    realistic), matching tools/scale_check.py's method.
 
-Usage: python tools/r13_study.py [records|scaling]
+Usage: python tools/r13_study.py [records|scaling [seam ...]]
+
+``scaling`` runs every seam unless seam names are given (e.g.
+``scaling hits_links``); each row also prints the Spark jobs it fired.
 """
 
 from __future__ import annotations
@@ -79,7 +82,7 @@ def _scaled_ids(spark, n_base: int, copies: int):
     )
 
 
-def scaling() -> None:
+def scaling(seams=()) -> None:
     import __spark_entry__ as entrymod
     from datamancer_spark import get_spark, load_tables
     from datamancer_spark.operators.components import (
@@ -107,12 +110,20 @@ def scaling() -> None:
     n_docs = doc.count()
     print(f"# scaling 1x/4x/16x over n_docs={n_docs} base ({SF_DIR})")
 
+    sc = spark.sparkContext
+
     def row(tag: str, fn) -> None:
+        if seams and tag.split("(")[0] not in seams:
+            return
         for copies in (1, 4, 16):
+            group = f"{tag}-{copies}x"
+            sc.setJobGroup(group, group)
             t0 = time.time()
             out_rows = fn(copies)
             dt = round(time.time() - t0, 2)
-            print(f"{tag} {copies}x: {dt}s rows={out_rows}")
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            print(f"{tag} {copies}x: {dt}s rows={out_rows} jobs={jobs}")
             _cleanup(spark)
 
     def pagerank_seam(copies: int) -> int:
@@ -198,6 +209,6 @@ if __name__ == "__main__":
     if what == "records":
         records()
     elif what == "scaling":
-        scaling()
+        scaling(sys.argv[2:])
     else:
         raise SystemExit(f"unknown mode {what!r}")
