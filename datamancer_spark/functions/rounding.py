@@ -20,8 +20,3 @@ def prnd(col: Column | str, n: int) -> Column:
         col = F.col(col)
     scale = float(10**n)
     return F.floor(col * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
-
-
-def prnd_sql(expr: str, n: int) -> str:
-    scale = float(10**n)
-    return f"floor(({expr}) * {scale} + 0.5) / {scale}"

@@ -54,11 +54,6 @@ for _k in range(8):
         )
 
 
-def idct2_8x8(block: np.ndarray) -> np.ndarray:
-    """2-D inverse DCT of one 8×8 coefficient block (orthonormal)."""
-    return _C.T @ block @ _C
-
-
 class _HuffTable:
     """Canonical JPEG Huffman table as a fast (code,length)→symbol map."""
 

@@ -48,7 +48,6 @@ structs) flow into joins/aggregations downstream.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -63,6 +62,12 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+)
+
+from .codecbackend import (
+    map_blobs,
+    resolve_audio_backend,
+    resolve_image_backend,
 )
 
 # -- ingestion ---------------------------------------------------------------
@@ -156,18 +161,14 @@ def media_decode_coverage(df: DataFrame, bin_col: str = "content") -> DataFrame:
     corpus-sized moves."""
     from ..functions.rounding import prnd
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"container": [], "screenable": []}
-            for blob in pdf[bin_col]:
-                blob = bytes(blob)
-                container, screen = _classify_decode_tier(blob)
-                out["container"].append(container)
-                out["screenable"].append(screen)
-            yield pd.DataFrame(out)
+    def rows_of(blob):
+        yield _classify_decode_tier(blob)
 
-    rows = df.select(bin_col).mapInPandas(
-        batches,
+    rows = map_blobs(
+        df,
+        [],
+        bin_col,
+        rows_of,
         StructType(
             [
                 StructField("container", StringType()),
@@ -551,7 +552,6 @@ def decode_images(
     backend slots in without touching plan shape."""
     if on_unsupported not in ("null", "error"):
         raise ValueError(f"on_unsupported must be null|error, got {on_unsupported!r}")
-    from .codecbackend import resolve_image_backend
 
     backend = resolve_image_backend(backend)
 
@@ -562,51 +562,42 @@ def decode_images(
     except ImportError:
         have_pil = False
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"path": [], "width": [], "height": [], "channels": [], "mean_intensity": []}
-            blobs = [bytes(b) for b in pdf[bin_col]]
-            results = backend.decode_batch(blobs)
-            for path, blob, res in zip(pdf["path"], blobs, results):
-                if res is not None:
-                    w, h, ch, px = res
-                    mean = round(float(px.mean()) / 255.0, 6)
-                elif have_pil:  # pragma: no cover - real codec path
-                    import io
+    def rows_of(path, blob, res):
+        if res is not None:
+            w, h, ch, px = res
+            mean = round(float(px.mean()) / 255.0, 6)
+        elif have_pil:  # pragma: no cover - real codec path
+            import io
 
-                    import numpy as np
-                    import PIL.Image as Image
+            import numpy as np
+            import PIL.Image as Image
 
-                    img = Image.open(io.BytesIO(blob))
-                    w, h = img.size
-                    ch = len(img.getbands())
-                    mean = round(
-                        float(np.asarray(img, dtype=np.float64).mean())
-                        / 255.0,
-                        6,
-                    )
-                elif allow_fake:
-                    # FAKE DECODE (deterministic stub): dims derived from
-                    # the digest so tests are stable.
-                    d = hashlib.md5(blob).digest()
-                    w, h = 64 + d[0] % 512, 64 + d[1] % 512
-                    ch = 3
-                    mean = round(d[2] / 255.0, 6)
-                elif on_unsupported == "error":
-                    raise NotImplementedError(
-                        f"decode beyond the no-codec-library chain "
-                        f"requires PIL (not in this environment): {path}"
-                    )
-                else:
-                    w = h = ch = mean = None
-                out["path"].append(path)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["mean_intensity"].append(mean)
-            yield pd.DataFrame(out)
+            img = Image.open(io.BytesIO(blob))
+            w, h = img.size
+            ch = len(img.getbands())
+            mean = round(
+                float(np.asarray(img, dtype=np.float64).mean()) / 255.0, 6
+            )
+        elif allow_fake:
+            # FAKE DECODE (deterministic stub): dims derived from
+            # the digest so tests are stable.
+            d = hashlib.md5(blob).digest()
+            w, h = 64 + d[0] % 512, 64 + d[1] % 512
+            ch = 3
+            mean = round(d[2] / 255.0, 6)
+        elif on_unsupported == "error":
+            raise NotImplementedError(
+                f"decode beyond the no-codec-library chain "
+                f"requires PIL (not in this environment): {path}"
+            )
+        else:
+            w = h = ch = mean = None
+        yield (w, h, ch, mean)
 
-    return df.select("path", bin_col).mapInPandas(batches, DECODE_SCHEMA)
+    return map_blobs(
+        df, ["path"], bin_col, rows_of, DECODE_SCHEMA,
+        decode=backend.decode_batch,
+    )
 
 
 FRAME_SCHEMA = StructType(
@@ -702,47 +693,36 @@ def sample_frames(
     unscreenable fraction, and curation never silently drops what it
     cannot read."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"path": [], "frame_idx": [], "frame_bytes": []}
-            for path, blob in zip(pdf["path"], pdf[bin_col]):
-                blob = bytes(blob)
-                if blob[:4] == b"GIF8":
-                    # decode sequentially (compositing needs every frame)
-                    # but EMIT only every-Nth, capped at max_frames
-                    emitted = 0
-                    for idx, w, h, rgb in gif_decode_frames(
-                        blob, max_frames=every_n * max_frames
-                    ):
-                        if idx % every_n:
-                            continue
-                        rows["path"].append(path)
-                        rows["frame_idx"].append(idx)
-                        rows["frame_bytes"].append(rgb)
-                        emitted += 1
-                        if emitted >= max_frames:
-                            break
+    def rows_of(path, blob):
+        if blob[:4] == b"GIF8":
+            # decode sequentially (compositing needs every frame)
+            # but EMIT only every-Nth, capped at max_frames
+            emitted = 0
+            for idx, w, h, rgb in gif_decode_frames(
+                blob, max_frames=every_n * max_frames
+            ):
+                if idx % every_n:
                     continue
-                if blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-                    for idx, w, h, rgb in avi_mjpeg_frames(
-                        blob, every_n=every_n, max_frames=max_frames
-                    ):
-                        rows["path"].append(path)
-                        rows["frame_idx"].append(idx)
-                        rows["frame_bytes"].append(rgb)
-                    continue
-                if not allow_fake:
-                    continue  # undecodable without ffmpeg: drop the row
-                n_fake_frames = max(1, len(blob) // max(every_n, 1))
-                for i in range(min(n_fake_frames, max_frames)):
-                    rows["path"].append(path)
-                    rows["frame_idx"].append(i * every_n)
-                    rows["frame_bytes"].append(
-                        hashlib.md5(blob + i.to_bytes(4, "big")).digest()
-                    )
-            yield pd.DataFrame(rows)
+                yield (idx, rgb)
+                emitted += 1
+                if emitted >= max_frames:
+                    break
+            return
+        if blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
+            for idx, w, h, rgb in avi_mjpeg_frames(
+                blob, every_n=every_n, max_frames=max_frames
+            ):
+                yield (idx, rgb)
+            return
+        if not allow_fake:
+            return  # undecodable without ffmpeg: drop the row
+        n_fake_frames = max(1, len(blob) // max(every_n, 1))
+        for i in range(min(n_fake_frames, max_frames)):
+            yield (
+                i * every_n, hashlib.md5(blob + i.to_bytes(4, "big")).digest()
+            )
 
-    return df.select("path", bin_col).mapInPandas(batches, FRAME_SCHEMA)
+    return map_blobs(df, ["path"], bin_col, rows_of, FRAME_SCHEMA)
 
 
 AUDIO_SCHEMA = StructType(
@@ -1263,8 +1243,6 @@ def audio_features(
     touching plan shape."""
     import numpy as np
 
-    from .codecbackend import resolve_audio_backend
-
     backend = resolve_audio_backend(backend)
 
     def _envelope(rate, mono):
@@ -1278,28 +1256,20 @@ def audio_features(
         ]
         return (round(n / rate, 6), int(rate), env)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"path": [], "duration_s": [], "sample_rate": [], "loudness": []}
-            blobs = [bytes(b) for b in pdf[bin_col]]
-            results = backend.decode_batch(blobs)
-            for path, blob, res in zip(pdf["path"], blobs, results):
-                if res is not None:
-                    dur, rate, env = _envelope(res[0], res[1])
-                elif allow_fake:
-                    d = hashlib.md5(blob).digest()
-                    dur = round(1 + d[0] / 8.0, 3)
-                    rate = 16000
-                    env = [round(b / 255.0, 4) for b in d[:envelope_bins]]
-                else:
-                    dur = rate = env = None
-                rows["path"].append(path)
-                rows["duration_s"].append(dur)
-                rows["sample_rate"].append(rate)
-                rows["loudness"].append(env)
-            yield pd.DataFrame(rows)
+    def rows_of(path, blob, res):
+        if res is not None:
+            yield _envelope(res[0], res[1])
+        elif allow_fake:
+            d = hashlib.md5(blob).digest()
+            env = [round(b / 255.0, 4) for b in d[:envelope_bins]]
+            yield (round(1 + d[0] / 8.0, 3), 16000, env)
+        else:
+            yield (None, None, None)
 
-    return df.select("path", bin_col).mapInPandas(batches, AUDIO_SCHEMA)
+    return map_blobs(
+        df, ["path"], bin_col, rows_of, AUDIO_SCHEMA,
+        decode=backend.decode_batch,
+    )
 
 
 # -- REAL header metadata (no codec libraries needed) ------------------------
@@ -1567,27 +1537,19 @@ def image_dimensions(df: DataFrame, bin_col: str = "content") -> DataFrame:
         )
     )
 
-    def walked_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .tiffcodec import tiff_dims
+    from .tiffcodec import tiff_dims
 
-        for pdf in it:
-            rows = {"path": [], "kind": [], "width": [], "height": []}
-            for path, kind, blob in zip(pdf["path"], pdf["kind"], pdf["_b"]):
-                blob = bytes(blob)
-                dims = (
-                    _jpeg_dims(blob)
-                    if kind == "image/jpeg"
-                    else tiff_dims(blob)
-                )
-                rows["path"].append(path)
-                rows["kind"].append(kind)
-                rows["width"].append(dims[0] if dims else None)
-                rows["height"].append(dims[1] if dims else None)
-            yield pd.DataFrame(rows)
+    def rows_of(path, kind, blob):
+        dims = _jpeg_dims(blob) if kind == "image/jpeg" else tiff_dims(blob)
+        yield (dims[0], dims[1]) if dims else (None, None)
 
-    walked = base.filter(
-        F.col("kind").isin("image/jpeg", "image/tiff")
-    ).mapInPandas(walked_batches, IMAGE_DIMS_SCHEMA)
+    walked = map_blobs(
+        base.filter(F.col("kind").isin("image/jpeg", "image/tiff")),
+        ["path", "kind"],
+        "_b",
+        rows_of,
+        IMAGE_DIMS_SCHEMA,
+    )
     return catalyst.unionByName(walked)
 
 
@@ -1820,27 +1782,19 @@ def frame_features(
     blobs — features, not pixels, are what shuffles downstream."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"path": [], "frame_idx": [], "mean_intensity": [], "motion": []}
-            for path, blob in zip(pdf["path"], pdf[bin_col]):
-                prev = None
-                for idx, w, h, rgb in gif_decode_frames(
-                    bytes(blob), max_frames=max_frames
-                ):
-                    arr = np.frombuffer(rgb, dtype=np.uint8).astype(np.float64)
-                    rows["path"].append(path)
-                    rows["frame_idx"].append(idx)
-                    rows["mean_intensity"].append(round(float(arr.mean()) / 255.0, 6))
-                    rows["motion"].append(
-                        0.0
-                        if prev is None
-                        else round(float(np.abs(arr - prev).mean()) / 255.0, 6)
-                    )
-                    prev = arr
-            yield pd.DataFrame(rows)
+    def rows_of(path, blob):
+        prev = None
+        for idx, w, h, rgb in gif_decode_frames(blob, max_frames=max_frames):
+            arr = np.frombuffer(rgb, dtype=np.uint8).astype(np.float64)
+            motion = (
+                0.0
+                if prev is None
+                else round(float(np.abs(arr - prev).mean()) / 255.0, 6)
+            )
+            yield (idx, round(float(arr.mean()) / 255.0, 6), motion)
+            prev = arr
 
-    return df.select("path", bin_col).mapInPandas(batches, FRAME_FEATURES_SCHEMA)
+    return map_blobs(df, ["path"], bin_col, rows_of, FRAME_FEATURES_SCHEMA)
 
 
 # -- perceptual near-dup (dHash) ---------------------------------------------
@@ -2087,28 +2041,23 @@ def resize_images(
     the SOURCE dims (the thumb's are the arguments)."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"path": [], "width": [], "height": [], "thumb": []}
-            for rid, blob in zip(pdf[id_col], pdf[bin_col]):
-                px = _decode_rgb(bytes(blob))
-                out["path"].append(rid)
-                if px is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["thumb"].append(None)
-                    continue
-                small = np.clip(
-                    np.round(box_resample(px, height, width)), 0, 255
-                ).astype(np.uint8)
-                out["width"].append(int(px.shape[1]))
-                out["height"].append(int(px.shape[0]))
-                out["thumb"].append(png_encode(small))
-            yield pd.DataFrame(out)
+    def rows_of(rid, blob):
+        px = _decode_rgb(blob)
+        if px is None:
+            yield (None, None, None)
+            return
+        small = np.clip(
+            np.round(box_resample(px, height, width)), 0, 255
+        ).astype(np.uint8)
+        yield (int(px.shape[1]), int(px.shape[0]), png_encode(small))
 
-    return df.select(
-        F.col(id_col).alias("path"), bin_col
-    ).mapInPandas(batches, RESIZE_SCHEMA)
+    return map_blobs(
+        df.select(F.col(id_col).alias("path"), bin_col),
+        ["path"],
+        bin_col,
+        rows_of,
+        RESIZE_SCHEMA,
+    )
 
 
 def image_dhash(
@@ -2121,53 +2070,40 @@ def image_dhash(
     shared ``decode_image_blob`` chain — PNG, baseline+progressive
     JPEG, GIF, BMP, TIFF, lossless WebP); other formats (video needs
     ffmpeg, absent here) yield NULL — one undecodable
-    blob must never kill a 100 TB job. ``backend`` (r10): an
-    ``ImageDecodeBackend`` instance/name routes pixel production
-    through the pluggable batch interface — the dHash SCREENS are the
-    decode-bound stage at crawl scale (SCALING.md), so this is where
-    an accelerated backend pays; it must pass
+    blob must never kill a 100 TB job; a NULL blob yields NULL too.
+    ``backend`` (r10): an ``ImageDecodeBackend`` instance/name (default
+    ``DATAMANCER_IMAGE_BACKEND``, else the pure-Python reference) routes
+    pixel production through the pluggable batch interface — the dHash
+    SCREENS are the decode-bound stage at crawl scale (SCALING.md), so
+    this is where an accelerated backend pays; it must pass
     ``validate_image_backend`` first, and the EXIF upright + grayscale
     post-steps are backend-independent (header reads on the blob).
-    Arrow-batched mapInPandas; only
-    (id, 8-byte hash) rows ever shuffle downstream. Output
+    Arrow-batched mapInPandas; only (id, 8-byte hash) rows ever
+    shuffle downstream. Output
     (``id_col``, dhash: long|NULL). Pair with ``dhash_pairs`` for the
     bucketed near-dup join — the image analog of SimHash over text."""
-    if backend is not None:
-        from .codecbackend import resolve_image_backend
+    backend = resolve_image_backend(backend)
 
-        backend = resolve_image_backend(backend)
+    def rows_of(rid, blob, decoded):
+        yield (_image_dhash_of(blob, decoded),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {id_col: [], "dhash": []}
-            blobs = [bytes(b) for b in pdf[bin_col]]
-            if backend is not None:
-                results = backend.decode_batch(blobs)
-                grays = [
-                    None if r is None else _gray_of(_px_post(b, r[3]))
-                    for b, r in zip(blobs, results)
-                ]
-            else:
-                grays = [_decode_gray(b) for b in blobs]
-            for rid, gray in zip(pdf[id_col], grays):
-                out[id_col].append(rid)
-                out["dhash"].append(None if gray is None else dhash64_gray(gray))
-            # dtype=object is load-bearing: one NULL (undecodable blob)
-            # in a batch would otherwise coerce the column to float64,
-            # silently mangling the low ~11 bits of EVERY hash > 2^53
-            # in that batch — false hamming-0 merges (caught by the r9
-            # curate_media_mix fixture; corrupt blobs are certain at
-            # crawl scale, so mixed batches are the norm, not the edge)
-            yield pd.DataFrame(
-                {
-                    id_col: out[id_col],
-                    "dhash": pd.Series(out["dhash"], dtype="object"),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, _dhash_schema_for(df, id_col)
+    return map_blobs(
+        df,
+        [id_col],
+        bin_col,
+        rows_of,
+        _dhash_schema_for(df, id_col),
+        decode=backend.decode_batch,
     )
+
+
+def _image_dhash_of(blob: bytes, decoded):
+    """dHash of one blob from its ``ImageDecodeBackend`` result (NULL
+    when undecodable): EXIF upright + grayscale are header reads on the
+    blob, so they stay backend-independent."""
+    if decoded is None:
+        return None
+    return dhash64_gray(_gray_of(_px_post(blob, decoded[3])))
 
 
 def dhash_pairs(
@@ -2232,43 +2168,34 @@ def audio_dhash(
     family, FLAC (r7), AIFF/AIFC, MPEG-1 Layer I/III — real MP3
     (late r7; WAV↔MP3 same-clip pairs fingerprint 0 bits apart in the
     cross-codec test) — and Ogg Vorbis (r9). Ogg Opus and the MPEG
-    refusal set yield NULL.
+    refusal set yield NULL, and so does a NULL blob.
     Arrow-batched mapInPandas; only
     (id, 8-byte hash) rows shuffle downstream. Pair with
     ``audio_dhash_pairs`` — the audio analog of ``image_dhash``/SimHash,
     sharing ``dedup.hamming_band_pairs``. ``backend`` (r10): an
-    ``AudioDecodeBackend`` instance/name routes sample production
-    through the pluggable batch interface (see ``image_dhash``)."""
-    if backend is not None:
-        from .codecbackend import resolve_audio_backend
+    ``AudioDecodeBackend`` instance/name (default
+    ``DATAMANCER_AUDIO_BACKEND``, else the pure-Python reference) routes
+    sample production through the pluggable batch interface (see
+    ``image_dhash``)."""
+    backend = resolve_audio_backend(backend)
 
-        backend = resolve_audio_backend(backend)
+    def rows_of(rid, blob, decoded):
+        yield (_audio_dhash_of(decoded),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {id_col: [], "dhash": []}
-            blobs = [bytes(b) for b in pdf[bin_col]]
-            if backend is not None:
-                results = backend.decode_batch(blobs)
-            else:
-                results = [audio_decode_array(b) for b in blobs]
-            for rid, decoded in zip(pdf[id_col], results):
-                out[id_col].append(rid)
-                out["dhash"].append(
-                    None if decoded is None else audio_dhash64(decoded[1])
-                )
-            # dtype=object: see image_dhash — a mixed decodable/NULL
-            # batch must not coerce int64 hashes through float64
-            yield pd.DataFrame(
-                {
-                    id_col: out[id_col],
-                    "dhash": pd.Series(out["dhash"], dtype="object"),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, _dhash_schema_for(df, id_col)
+    return map_blobs(
+        df,
+        [id_col],
+        bin_col,
+        rows_of,
+        _dhash_schema_for(df, id_col),
+        decode=backend.decode_batch,
     )
+
+
+def _audio_dhash_of(decoded):
+    """Envelope dHash of one ``AudioDecodeBackend`` result (NULL when
+    undecodable)."""
+    return None if decoded is None else audio_dhash64(decoded[1])
 
 
 def audio_dhash_pairs(
@@ -2301,15 +2228,14 @@ def dhash_scalar_udf():
     decoders, NULL otherwise) — the column-preserving form of ``image_dhash`` for
     plans that must stay stateless projections (streaming screens):
     ``df.withColumn("dhash", dhash_scalar_udf()(F.col("content")))``."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(LongType())
     def _dhash(blobs: pd.Series) -> pd.Series:
         out = []
         for blob in blobs:
-            gray = None if blob is None else _decode_gray(bytes(blob))
-            out.append(None if gray is None else dhash64_gray(gray))
+            blob = b"" if blob is None else bytes(blob)
+            out.append(_image_dhash_of(blob, decode_image_blob(blob)))
         return pd.Series(out, dtype="object")
 
     return _dhash
@@ -2328,7 +2254,7 @@ def audio_dhash_scalar_udf():
         out = []
         for blob in blobs:
             dec = None if blob is None else audio_decode_array(bytes(blob))
-            out.append(None if dec is None else audio_dhash64(dec[1]))
+            out.append(_audio_dhash_of(dec))
         return pd.Series(out, dtype="object")
 
     return _adhash
@@ -2655,44 +2581,33 @@ def video_metadata(df: DataFrame, bin_col: str = "content") -> DataFrame:
     Unknown containers yield NULL fields, never errors."""
     import struct
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"path": [], "container": [], "duration_s": [],
-                   "width": [], "height": [], "codec": []}
-            for path, blob in zip(pdf["path"], pdf[bin_col]):
-                blob = bytes(blob)
-                container = dur = w = h = codec = None
-                meta = mp4_metadata_blob(blob)
-                wb = webm_metadata(blob) if meta is None else None
-                if meta is not None:
-                    brand, dur, w, h, codec = meta
-                    container = f"mp4/{brand}"
-                elif wb is not None:
-                    dur, w, h, codec = wb
-                    container = "webm"
-                elif blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-                    container = "avi"
-                    codec = avi_video_fourcc(blob)
-                    # canonical avih: LIST hdrl at 12, avih body at 32
-                    if blob[12:16] == b"LIST" and blob[20:24] == b"hdrl" \
-                            and blob[24:28] == b"avih":
-                        body = blob[32:88]
-                        if len(body) >= 40:
-                            us_pf, _, _, _, frames = struct.unpack(
-                                "<5I", body[:20]
-                            )
-                            w, h = struct.unpack("<II", body[32:40])
-                            if us_pf:
-                                dur = round(frames * us_pf / 1e6, 6)
-                out["path"].append(path)
-                out["container"].append(container)
-                out["duration_s"].append(dur)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["codec"].append(codec)
-            yield pd.DataFrame(out)
+    def rows_of(path, blob):
+        container = dur = w = h = codec = None
+        meta = mp4_metadata_blob(blob)
+        wb = webm_metadata(blob) if meta is None else None
+        if meta is not None:
+            brand, dur, w, h, codec = meta
+            container = f"mp4/{brand}"
+        elif wb is not None:
+            dur, w, h, codec = wb
+            container = "webm"
+        elif blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
+            container = "avi"
+            codec = avi_video_fourcc(blob)
+            # canonical avih: LIST hdrl at 12, avih body at 32
+            if blob[12:16] == b"LIST" and blob[20:24] == b"hdrl" \
+                    and blob[24:28] == b"avih":
+                body = blob[32:88]
+                if len(body) >= 40:
+                    us_pf, _, _, _, frames = struct.unpack(
+                        "<5I", body[:20]
+                    )
+                    w, h = struct.unpack("<II", body[32:40])
+                    if us_pf:
+                        dur = round(frames * us_pf / 1e6, 6)
+        yield (container, dur, w, h, codec)
 
-    return df.select("path", bin_col).mapInPandas(batches, VIDEO_META_SCHEMA)
+    return map_blobs(df, ["path"], bin_col, rows_of, VIDEO_META_SCHEMA)
 
 
 AUDIO_META_SCHEMA = StructType(
@@ -2950,110 +2865,97 @@ def audio_container_metadata(
     ``media_decode_coverage`` aggregates it per container."""
     import struct
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"path": [], "container": [], "duration_s": [],
-                   "sample_rate": [], "channels": [], "bits_per_sample": [],
-                   "decodable": []}
-            for path, blob in zip(pdf["path"], pdf[bin_col]):
-                blob = bytes(blob)
-                container = dur = rate = ch = bits = dec = None
-                fl = flac_streaminfo(blob)
-                og = ogg_metadata(blob) if fl is None else None
-                # AIFF's FORM magic is unambiguous and must beat the
-                # HEURISTIC mp3 sync scan: big-endian PCM routinely
-                # contains 0xFFEx byte pairs (~5% of noise clips
-                # false-hit), so magic-based containers go first
-                aiff_magic = (
-                    len(blob) >= 12 and blob[:4] == b"FORM"
-                    and blob[8:12] in (b"AIFF", b"AIFC")
-                )
-                aif = (
-                    _aiff_comm(blob) if fl is None and og is None else None
-                )
-                # ADTS before the mp3 sync scan: an ADTS header also
-                # matches the looser MPEG sync heuristic, but only the
-                # chained frame-length walk proves ADTS
-                adts = (
-                    adts_metadata(blob)
-                    if fl is None and og is None and not aiff_magic
-                    else None
-                )
-                mp = (
-                    mp3_header_info(blob)
-                    if fl is None and og is None and not aiff_magic
-                    and adts is None
-                    else None
-                )
-                if fl is not None:
-                    rate, ch, bits, dur = fl
-                    container = "flac"
-                    dec = True  # r7: real pure-stdlib FLAC decode
-                elif og is not None:
-                    codec, rate, ch, dur = og
-                    container = f"ogg/{codec}"
-                    if codec == "vorbis":
-                        from .vorbiscodec import vorbis_stream_supported
+    def rows_of(path, blob):
+        container = dur = rate = ch = bits = dec = None
+        fl = flac_streaminfo(blob)
+        og = ogg_metadata(blob) if fl is None else None
+        # AIFF's FORM magic is unambiguous and must beat the
+        # HEURISTIC mp3 sync scan: big-endian PCM routinely
+        # contains 0xFFEx byte pairs (~5% of noise clips
+        # false-hit), so magic-based containers go first
+        aiff_magic = (
+            len(blob) >= 12 and blob[:4] == b"FORM"
+            and blob[8:12] in (b"AIFF", b"AIFC")
+        )
+        aif = (
+            _aiff_comm(blob) if fl is None and og is None else None
+        )
+        # ADTS before the mp3 sync scan: an ADTS header also
+        # matches the looser MPEG sync heuristic, but only the
+        # chained frame-length walk proves ADTS
+        adts = (
+            adts_metadata(blob)
+            if fl is None and og is None and not aiff_magic
+            else None
+        )
+        mp = (
+            mp3_header_info(blob)
+            if fl is None and og is None and not aiff_magic
+            and adts is None
+            else None
+        )
+        if fl is not None:
+            rate, ch, bits, dur = fl
+            container = "flac"
+            dec = True  # r7: real pure-stdlib FLAC decode
+        elif og is not None:
+            codec, rate, ch, dur = og
+            container = f"ogg/{codec}"
+            if codec == "vorbis":
+                from .vorbiscodec import vorbis_stream_supported
 
-                        dec = vorbis_stream_supported(blob)
-                    else:
-                        dec = False
-                elif aif is not None:
-                    ch, frames, bits, rate, comp = aif
-                    container = "aiff"
-                    dur = round(frames / rate, 6) if rate else None
-                    dec = comp.lower() in _AIFC_DECODABLE
-                elif aiff_magic:
-                    # FORM magic but corrupt/absurd COMM: still an AIFF
-                    # container (NULL fields), never an mp3 false hit
-                    container = "aiff"
-                    dec = False
-                elif adts is not None:
-                    rate, ch, dur, _nf = adts
-                    container = "aac/adts"
-                    # decode refuses: spectral Huffman codebooks fail
-                    # the transcription gate (see adts_metadata)
-                    dec = False
-                elif mp is not None:
-                    rate, ch, _br, dur = mp
-                    container = "mp3"
-                    # r7: MPEG-1 Layer I/III streams decode for real
-                    # (operators/mpegaudio.py); the side-info screen
-                    # reports whether every frame stays within the
-                    # shipped Huffman tables / feature set
-                    from .mpegaudio import mpeg_stream_supported
+                dec = vorbis_stream_supported(blob)
+            else:
+                dec = False
+        elif aif is not None:
+            ch, frames, bits, rate, comp = aif
+            container = "aiff"
+            dur = round(frames / rate, 6) if rate else None
+            dec = comp.lower() in _AIFC_DECODABLE
+        elif aiff_magic:
+            # FORM magic but corrupt/absurd COMM: still an AIFF
+            # container (NULL fields), never an mp3 false hit
+            container = "aiff"
+            dec = False
+        elif adts is not None:
+            rate, ch, dur, _nf = adts
+            container = "aac/adts"
+            # decode refuses: spectral Huffman codebooks fail
+            # the transcription gate (see adts_metadata)
+            dec = False
+        elif mp is not None:
+            rate, ch, _br, dur = mp
+            container = "mp3"
+            # r7: MPEG-1 Layer I/III streams decode for real
+            # (operators/mpegaudio.py); the side-info screen
+            # reports whether every frame stays within the
+            # shipped Huffman tables / feature set
+            from .mpegaudio import mpeg_stream_supported
 
-                    dec = mpeg_stream_supported(blob)
-                elif (len(blob) >= 12 and blob[:4] == b"RIFF"
-                      and blob[8:12] == b"WAVE"):
-                    container = "wav"
-                    pos, fmt, dlen = 12, None, None
-                    while pos + 8 <= len(blob):
-                        cid = blob[pos : pos + 4]
-                        ln = struct.unpack("<I", blob[pos + 4 : pos + 8])[0]
-                        if cid == b"fmt " and ln >= 16:
-                            body = blob[pos + 8 : pos + 8 + ln]
-                            if len(body) >= 16:  # truncation guard
-                                fmt = struct.unpack("<HHIIHH", body[:16])
-                        elif cid == b"data":
-                            dlen = ln
-                        pos += 8 + ln + (ln & 1)
-                    dec = False
-                    if fmt is not None:
-                        afmt, ch, rate, brate, _, bits = fmt
-                        if dlen is not None and brate:
-                            dur = round(dlen / brate, 6)
-                        dec = _wav_fmt_decodable(afmt, bits)
-                out["path"].append(path)
-                out["container"].append(container)
-                out["duration_s"].append(dur)
-                out["sample_rate"].append(rate)
-                out["channels"].append(ch)
-                out["bits_per_sample"].append(bits)
-                out["decodable"].append(dec)
-            yield pd.DataFrame(out)
+            dec = mpeg_stream_supported(blob)
+        elif (len(blob) >= 12 and blob[:4] == b"RIFF"
+              and blob[8:12] == b"WAVE"):
+            container = "wav"
+            pos, fmt, dlen = 12, None, None
+            while pos + 8 <= len(blob):
+                cid = blob[pos : pos + 4]
+                ln = struct.unpack("<I", blob[pos + 4 : pos + 8])[0]
+                if cid == b"fmt " and ln >= 16:
+                    body = blob[pos + 8 : pos + 8 + ln]
+                    if len(body) >= 16:  # truncation guard
+                        fmt = struct.unpack("<HHIIHH", body[:16])
+                elif cid == b"data":
+                    dlen = ln
+                pos += 8 + ln + (ln & 1)
+            dec = False
+            if fmt is not None:
+                afmt, ch, rate, brate, _, bits = fmt
+                if dlen is not None and brate:
+                    dur = round(dlen / brate, 6)
+                dec = _wav_fmt_decodable(afmt, bits)
+        yield (container, dur, rate, ch, bits, dec)
 
-    return df.select("path", bin_col).mapInPandas(batches, AUDIO_META_SCHEMA)
+    return map_blobs(df, ["path"], bin_col, rows_of, AUDIO_META_SCHEMA)
 
 
 def _keep_min_per_signature(cur: DataFrame, sigs: DataFrame, id_col: str):

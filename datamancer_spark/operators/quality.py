@@ -59,13 +59,6 @@ def ngrams_from_tokens(toks, n: int):
     )
 
 
-def word_ngrams(text, n: int):
-    """All word n-grams straight from a text column (tokenizes inline —
-    prefer ngrams_from_tokens over a projected token column on hot
-    paths)."""
-    return ngrams_from_tokens(tokens(text), n)
-
-
 def repetition_stats(
     df: DataFrame,
     text_col: str = "text",

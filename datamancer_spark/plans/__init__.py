@@ -14,10 +14,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-
-
 def has_partition_filter(df: DataFrame, fragment: str | None = None) -> bool:
     """True if the scan prunes partitions (PartitionFilters non-empty).
     At 100 TB, a date filter that doesn't appear here scans every
@@ -72,7 +68,3 @@ def has_partial_aggregation(df: DataFrame) -> bool:
     """Hash aggregation with a map-side partial phase (two HashAggregate
     nodes around the exchange)."""
     return executed_plan(df).count("HashAggregate") >= 2
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    return executed_plan(df).count("WholeStageCodegen")

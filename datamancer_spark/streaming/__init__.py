@@ -31,10 +31,6 @@ def read_json_stream(
     )
 
 
-def with_watermark(stream: DataFrame, ts_col: str, delay: str = "10 minutes") -> DataFrame:
-    return stream.withWatermark(ts_col, delay)
-
-
 def tumbling_agg(
     stream: DataFrame,
     ts_col: str,

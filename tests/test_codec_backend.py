@@ -345,3 +345,121 @@ class TestDhashBackendWiring:
         )
         assert default == explicit
         assert all(h is not None for _, h in default)
+
+
+@pytest.mark.parametrize(
+    "kernel, env_var, kind",
+    [
+        ("decode_images", "DATAMANCER_IMAGE_BACKEND", "image"),
+        ("image_dhash", "DATAMANCER_IMAGE_BACKEND", "image"),
+        ("audio_features", "DATAMANCER_AUDIO_BACKEND", "audio"),
+        ("audio_dhash", "DATAMANCER_AUDIO_BACKEND", "audio"),
+    ],
+)
+def test_backend_env_var_selects_backend(spark, monkeypatch, kernel, env_var, kind):
+    """The env var selects the backend for EVERY backend kernel — the
+    dHash screens included, not only the decode stages: an unknown
+    name is the same named refusal everywhere."""
+    from datamancer_spark.operators import multimodal
+
+    df = spark.createDataFrame(
+        [("a", bytearray(b""))], "path string, content binary"
+    )
+    monkeypatch.setenv(env_var, "no-such-backend")
+    with pytest.raises(ValueError, match=f"unknown {kind} backend"):
+        getattr(multimodal, kernel)(df)
+
+
+class TestMapBlobs:
+    """``map_blobs`` owns the Arrow-boundary policy for every kernel
+    over a binary column; these pin the contract on the kernel itself,
+    not on one caller."""
+
+    def test_exact_int64_in_mixed_null_batch(self, spark):
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        from datamancer_spark.operators.codecbackend import map_blobs
+
+        big = (1 << 62) + 1
+        df = spark.createDataFrame(
+            [(i, bytearray(b"x" * (i % 3))) for i in range(30)],
+            "doc_id long, content binary",
+        ).coalesce(1)  # one partition -> one mixed batch
+
+        def rows_of(doc_id, blob):
+            yield (None if doc_id % 4 == 0 else big + doc_id,)
+
+        schema = StructType(
+            [StructField("doc_id", LongType()), StructField("v", LongType())]
+        )
+        got = {
+            r["doc_id"]: r["v"]
+            for r in map_blobs(
+                df, ["doc_id"], "content", rows_of, schema
+            ).collect()
+        }
+        assert got == {i: None if i % 4 == 0 else big + i for i in range(30)}
+
+    def test_null_is_empty_and_decode_runs_once_per_batch(self, spark):
+        from pyspark.sql.types import (
+            BinaryType,
+            StringType,
+            StructField,
+            StructType,
+        )
+
+        from datamancer_spark.operators.codecbackend import map_blobs
+
+        df = spark.createDataFrame(
+            [
+                ("a", bytearray(b"ab")),
+                ("b", None),
+                ("c", bytearray(b"")),
+                ("d", bytearray(b"d")),
+            ],
+            "path string, content binary",
+        ).coalesce(1)
+
+        def decode(blobs):
+            return [f"{len(blobs)}:{b!r}" for b in blobs]
+
+        def rows_of(path, blob, decoded):
+            if path == "d":
+                return  # zero rows for this blob
+            yield (blob, decoded)
+            if path == "a":
+                yield (b"again", decoded)
+
+        out = map_blobs(
+            df,
+            ["path"],
+            "content",
+            rows_of,
+            StructType(
+                [
+                    StructField("path", StringType()),
+                    StructField("blob", BinaryType()),
+                    StructField("decoded", StringType()),
+                ]
+            ),
+            decode=decode,
+        )
+        assert sorted(tuple(r) for r in out.collect()) == [
+            ("a", b"ab", "4:b'ab'"),
+            ("a", b"again", "4:b'ab'"),
+            ("b", b"", "4:b''"),
+            ("c", b"", "4:b''"),
+        ]
+
+
+def test_blob_kernels_go_through_map_blobs():
+    """Regrowth guard: a new kernel over a binary column in these
+    modules goes through ``map_blobs``, never its own ``mapInPandas``
+    batch loop (the copies are what drifted apart on NULL blobs)."""
+    import pathlib
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / (
+        "datamancer_spark/operators"
+    )
+    for name in ("multimodal.py", "warc.py"):
+        assert "mapInPandas(" not in (ops / name).read_text(), name

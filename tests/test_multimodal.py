@@ -750,32 +750,47 @@ class TestImageDhash:
         to coerce the pandas hash column to float64, silently mangling
         the low ~11 bits of every hash > 2^53 in that batch — false
         hamming-0 merges downstream. Hashes must be BIT-EXACT with the
-        pure kernel even when the batch mixes NULLs in."""
-        from datamancer_spark.operators.fixtures import pattern_png_blob
+        pure kernel even when the batch mixes NULLs in — for the image
+        AND the audio fingerprint."""
+        from datamancer_spark.operators.fixtures import (
+            pattern_png_blob,
+            wav_dhash_blob,
+        )
         from datamancer_spark.operators.multimodal import (
             _decode_gray,
+            audio_decode_array,
+            audio_dhash,
+            audio_dhash64,
             dhash64_gray,
             image_dhash,
         )
 
-        rows = []
-        want = {}
-        for i in range(24):
-            if i % 5 == 0:  # interleave undecodables into every batch
-                rows.append((i, bytearray(b"\xff\xd8\xff nope")))
-                want[i] = None
-            else:
-                blob = pattern_png_blob(i)
-                rows.append((i, bytearray(blob)))
-                want[i] = dhash64_gray(_decode_gray(blob))
-        df = spark.createDataFrame(
-            rows, "doc_id long, content binary"
-        ).coalesce(1)  # one partition -> one mixed batch
-        got = {
-            r["doc_id"]: r["dhash"]
-            for r in image_dhash(df, id_col="doc_id").collect()
-        }
-        assert got == want
+        kernels = [
+            (image_dhash, pattern_png_blob,
+             lambda b: dhash64_gray(_decode_gray(b))),
+            (audio_dhash, wav_dhash_blob,
+             lambda b: audio_dhash64(audio_decode_array(b)[1])),
+        ]
+        for kernel, blob_of, pure in kernels:
+            rows = []
+            want = {}
+            for i in range(24):
+                if i % 5 == 0:  # interleave undecodables into every batch
+                    rows.append((i, bytearray(b"\xff\xd8\xff nope")))
+                    want[i] = None
+                else:
+                    blob = blob_of(i)
+                    rows.append((i, bytearray(blob)))
+                    want[i] = pure(blob)
+            assert any(abs(v) > 2**53 for v in want.values() if v)
+            df = spark.createDataFrame(
+                rows, "doc_id long, content binary"
+            ).coalesce(1)  # one partition -> one mixed batch
+            got = {
+                r["doc_id"]: r["dhash"]
+                for r in kernel(df, id_col="doc_id").collect()
+            }
+            assert got == want, kernel.__name__
 
     def test_dhash_pairs_groups_near_dups_only(self, spark):
         import numpy as np
@@ -2803,3 +2818,54 @@ class TestRealBmpDecode:
         assert row["mean_intensity"] == round(float(px.mean()) / 255.0, 6)
         [hrow] = image_dhash(df).collect()
         assert hrow["dhash"] is not None
+
+
+NULL_BLOB_KERNELS = {
+    "media_decode_coverage": ("multimodal", {}),
+    "decode_images": ("multimodal", {}),
+    "sample_frames": ("multimodal", {"every_n": 1}),
+    "audio_features": ("multimodal", {}),
+    "image_dimensions": ("multimodal", {}),
+    "frame_features": ("multimodal", {}),
+    "resize_images": ("multimodal", {}),
+    "image_dhash": ("multimodal", {}),
+    "audio_dhash": ("multimodal", {}),
+    "video_metadata": ("multimodal", {}),
+    "audio_container_metadata": ("multimodal", {}),
+    "warc_records": ("warc", {"id_col": "path"}),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(NULL_BLOB_KERNELS))
+def test_null_blob_same_rows_as_empty_blob(spark, kernel):
+    """A NULL blob (Datamancer's VNull) is an empty blob at every
+    Arrow-boundary kernel: the frame with a NULL ``content`` returns
+    exactly the rows the same frame with ``b""`` returns, and never a
+    worker stack trace — in a batch that also carries decodable
+    image, audio and WARC blobs."""
+    import importlib
+
+    from datamancer_spark.operators.fixtures import (
+        pattern_png_blob,
+        wav_dhash_blob,
+        warc_blob,
+    )
+
+    module, kwargs = NULL_BLOB_KERNELS[kernel]
+    fn = getattr(
+        importlib.import_module(f"datamancer_spark.operators.{module}"),
+        kernel,
+    )
+    real = [
+        ("png", bytearray(pattern_png_blob(1))),
+        ("wav", bytearray(wav_dhash_blob(1))),
+        ("warc", bytearray(warc_blob(0))),
+    ]
+
+    def rows(blob):
+        df = spark.createDataFrame(
+            real + [("x", blob)], "path string, content binary"
+        ).coalesce(1)  # one partition -> the NULL shares a batch
+        return sorted(repr(r) for r in fn(df, **kwargs).collect())
+
+    assert rows(None) == rows(bytearray(b""))

@@ -264,6 +264,18 @@ def test_media_fixture_tier_plans(spark, sf_dir):
         "curate_media_mix": 7,
         "curate_audio_mix": 7,
     }
+    # Python stages per query: each blob kernel is ONE map_blobs
+    # MapInPandas (the fixture generators add theirs); the dHash pair
+    # queries read pinned signatures, so no Python stage remains
+    python_stages = {
+        "media_decode_coverage_mix": 2,
+        "resize_thumbs_rgb": 5,
+        "image_decode_multiformat": 2,
+        "image_dhash_real_pairs": 0,
+        "audio_dhash_real_pairs": 0,
+        "curate_media_mix": 2,
+        "curate_audio_mix": 2,
+    }
     qs = e.queries()
     for name, budget in budgets.items():
         plan = executed_plan(qs[name](spark, sf_dir))
@@ -271,6 +283,9 @@ def test_media_fixture_tier_plans(spark, sf_dir):
             name, plan.count("Exchange"))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
+        assert plan.count("MapInPandas") <= python_stages[name], (
+            name, plan.count("MapInPandas"))
+        assert "EvalPython" not in plan, name
 
 
 def test_pipeline_from_crawl_budget(spark, sf_dir):
@@ -474,6 +489,18 @@ def test_warc_ingest_zero_shuffle(spark, sf_dir):
     # (test-only) and the record walk itself; production is one
     assert plan.count("MapInPandas") <= 2
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    # production shape: an (id, bytes) frame with no fixture generator
+    # is exactly the one record-walk stage and nothing else
+    from datamancer_spark.operators.fixtures import warc_blob
+    from datamancer_spark.operators.warc import warc_records
+
+    blobs = spark.createDataFrame(
+        [(i, bytearray(warc_blob(i))) for i in range(2)],
+        "doc_id long, content binary",
+    )
+    plan = executed_plan(warc_records(blobs))
+    assert plan.count("MapInPandas") == 1
+    assert "Exchange" not in plan and "EvalPython" not in plan
 
 
 def test_nb_all_joins_broadcast(spark, sf_dir):
