@@ -22,6 +22,14 @@ corruption detection for dependency-freedom and treat any structural
 inconsistency as undecodable (return ``None``, never wrong samples or
 an exception).
 
+Overrun policy: every field is read through ``bitreader.BitReaderMSB``,
+and a read past the end of the blob raises ``BitOverrun``. The one
+``try`` around the frame loop in ``flac_decode_channels`` turns it into
+``None`` — except a tail shorter than a 14-bit sync code after the last
+frame, which simply ends the stream. A ``None`` from the helpers means
+a malformed value (reserved code, ``prec == 15``, Rice ``method > 1``,
+a unary run past its limit), never a short read.
+
 Round-trip verified against an independent test-side FLAC encoder
 (tests/test_flac.py: own Rice coder, fixed/LPC predictors, channel
 decorrelation) — encoder and decoder share no code.
@@ -36,6 +44,8 @@ decodes in ~10 ms); swap a codec library in for bulk transcoding.
 from __future__ import annotations
 
 import numpy as np
+
+from .bitreader import BitOverrun, BitReaderMSB
 
 _FIXED_COEFS = {
     0: [],
@@ -53,65 +63,24 @@ _RATE_CODES = {
 _SIZE_CODES = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 
 
-class _Bits:
-    """MSB-first bit reader with byte alignment for frame boundaries."""
-
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int | None:
-        v = 0
-        d = self.data
-        pos, bit = self.pos, self.bit
-        while n > 0:
-            if pos >= len(d):
-                return None
-            take = min(8 - bit, n)
-            chunk = (d[pos] >> (8 - bit - take)) & ((1 << take) - 1)
-            v = (v << take) | chunk
-            bit += take
-            n -= take
-            if bit == 8:
-                pos += 1
-                bit = 0
-        self.pos, self.bit = pos, bit
-        return v
-
-    def read_signed(self, n: int) -> int | None:
-        v = self.read(n)
-        if v is None:
-            return None
-        return v - (1 << n) if v >= (1 << (n - 1)) else v
-
-    def unary(self, limit: int = 1 << 24) -> int | None:
-        q = 0
-        while q < limit:
-            b = self.read(1)
-            if b is None:
-                return None
-            if b:
-                return q
-            q += 1
-        return None
-
-    def align(self) -> None:
-        if self.bit:
-            self.pos += 1
-            self.bit = 0
-
-    def at_end(self) -> bool:
-        return self.pos >= len(self.data)
+def _signed(br: BitReaderMSB, n: int) -> int:
+    v = br.read(n)
+    return v - (1 << n) if v >= (1 << (n - 1)) else v
 
 
-def _coded_number(br: _Bits) -> int | None:
+def _unary(br: BitReaderMSB, limit: int = 1 << 24) -> int | None:
+    """Count of 0 bits before the next 1, or ``None`` past ``limit``."""
+    q = 0
+    while q < limit:
+        if br.read1():
+            return q
+        q += 1
+    return None
+
+
+def _coded_number(br: BitReaderMSB) -> int | None:
     """UTF-8-style frame/sample number (spec 9.1.5; up to 7 bytes)."""
     b0 = br.read(8)
-    if b0 is None:
-        return None
     if b0 < 0x80:
         return b0
     n = 0
@@ -124,22 +93,22 @@ def _coded_number(br: _Bits) -> int | None:
     v = b0 & (mask - 1)
     for _ in range(n):
         b = br.read(8)
-        if b is None or (b & 0xC0) != 0x80:
+        if (b & 0xC0) != 0x80:
             return None
         v = (v << 6) | (b & 0x3F)
     return v
 
 
-def _residual(br: _Bits, blocksize: int, order: int) -> list[int] | None:
+def _residual(
+    br: BitReaderMSB, blocksize: int, order: int
+) -> list[int] | None:
     """Rice-coded residual (spec 9.2.7), including the raw escape."""
     method = br.read(2)
-    if method is None or method > 1:
+    if method > 1:
         return None
     plen = 4 if method == 0 else 5
     escape = (1 << plen) - 1
     porder = br.read(4)
-    if porder is None:
-        return None
     nparts = 1 << porder
     if blocksize % nparts:
         return None  # blocksize must divide evenly into partitions
@@ -149,80 +118,50 @@ def _residual(br: _Bits, blocksize: int, order: int) -> list[int] | None:
         if count < 0:
             return None
         param = br.read(plen)
-        if param is None:
-            return None
         if param == escape:
             nbits = br.read(5)
-            if nbits is None:
-                return None
-            for _ in range(count):
-                if nbits == 0:
-                    out.append(0)
-                    continue
-                v = br.read_signed(nbits)
-                if v is None:
-                    return None
-                out.append(v)
+            if nbits == 0:
+                out.extend([0] * count)
+            else:
+                out.extend(_signed(br, nbits) for _ in range(count))
             continue
         for _ in range(count):
-            q = br.unary()
+            q = _unary(br)
             if q is None:
                 return None
-            r = br.read(param) if param else 0
-            if r is None:
-                return None
-            u = (q << param) | r
+            u = (q << param) | br.read(param)
             out.append((u >> 1) ^ -(u & 1))  # zigzag
     return out
 
 
-def _subframe(br: _Bits, blocksize: int, bps: int) -> np.ndarray | None:
+def _subframe(br: BitReaderMSB, blocksize: int, bps: int) -> np.ndarray | None:
     """One channel's samples (spec 9.2.3-9.2.6)."""
-    if br.read(1) != 0:  # mandatory zero pad bit
+    if br.read1() != 0:  # mandatory zero pad bit
         return None
     code = br.read(6)
-    if code is None:
-        return None
     wasted = 0
-    flag = br.read(1)
-    if flag is None:
-        return None
-    if flag:
-        k = br.unary()
+    if br.read1():
+        k = _unary(br)
         if k is None:
             return None
         wasted = k + 1
     eff = bps - wasted
     if eff <= 0:
         return None
-    samples: list[int] | None
+    samples: list[int]
     if code == 0:  # CONSTANT
-        v = br.read_signed(eff)
-        if v is None:
-            return None
-        samples = [v] * blocksize
+        samples = [_signed(br, eff)] * blocksize
     elif code == 1:  # VERBATIM
-        samples = []
-        for _ in range(blocksize):
-            v = br.read_signed(eff)
-            if v is None:
-                return None
-            samples.append(v)
+        samples = [_signed(br, eff) for _ in range(blocksize)]
     elif 8 <= code <= 12:  # FIXED, order 0-4
         order = code - 8
         if order > blocksize:
             return None
-        warm = []
-        for _ in range(order):
-            v = br.read_signed(eff)
-            if v is None:
-                return None
-            warm.append(v)
+        samples = [_signed(br, eff) for _ in range(order)]
         res = _residual(br, blocksize, order)
         if res is None:
             return None
         coefs = _FIXED_COEFS[order]
-        samples = warm
         for r in res:
             pred = 0
             for j, c in enumerate(coefs):
@@ -232,29 +171,18 @@ def _subframe(br: _Bits, blocksize: int, bps: int) -> np.ndarray | None:
         order = (code & 31) + 1
         if order > blocksize:
             return None
-        warm = []
-        for _ in range(order):
-            v = br.read_signed(eff)
-            if v is None:
-                return None
-            warm.append(v)
+        samples = [_signed(br, eff) for _ in range(order)]
         prec = br.read(4)
-        if prec is None or prec == 15:
+        if prec == 15:
             return None
         prec += 1
-        shift = br.read_signed(5)
-        if shift is None or shift < 0:
+        shift = _signed(br, 5)
+        if shift < 0:
             return None
-        coefs = []
-        for _ in range(order):
-            c = br.read_signed(prec)
-            if c is None:
-                return None
-            coefs.append(c)
+        coefs = [_signed(br, prec) for _ in range(order)]
         res = _residual(br, blocksize, order)
         if res is None:
             return None
-        samples = warm
         for r in res:
             acc = 0
             for j, c in enumerate(coefs):
@@ -271,7 +199,7 @@ def _subframe(br: _Bits, blocksize: int, bps: int) -> np.ndarray | None:
 def flac_decode_channels(blob: bytes):
     """Decode every frame: ``(sample_rate, bits_per_sample,
     [per-channel int64 arrays])`` with channel decorrelation undone, or
-    ``None`` for non-FLAC / unsupported / malformed input."""
+    ``None`` for non-FLAC / unsupported / malformed / truncated input."""
     from .multimodal import flac_streaminfo
 
     info = flac_streaminfo(blob)
@@ -294,124 +222,107 @@ def flac_decode_channels(blob: bytes):
         t = packed & ((1 << 36) - 1)
         total = t if t else None
 
-    br = _Bits(blob, pos)
+    br = BitReaderMSB(blob, pos * 8)
     chans: list[list[np.ndarray]] = [[] for _ in range(nch0)]
     got = 0
-    while not br.at_end():
-        if total is not None and got >= total:
-            break
-        start = br.pos
-        sync = br.read(14)
-        if sync is None:
-            break
-        if sync != 0x3FFE:
-            # frames end where the sync pattern stops: trailing bytes
-            # after at least one good frame are tolerated (CRCs are not
-            # validated either — structural strictness only), a stream
-            # with no leading frame is refused
-            if got:
+    try:
+        while br.bits_left() >= 14:  # a shorter tail holds no sync code
+            if total is not None and got >= total:
                 break
-            return None
-        if br.read(1) != 0:  # reserved
-            return None
-        if br.read(1) is None:  # blocking strategy
-            return None
-        bs_code = br.read(4)
-        sr_code = br.read(4)
-        ch_code = br.read(4)
-        ss_code = br.read(3)
-        if None in (bs_code, sr_code, ch_code, ss_code) or br.read(1) != 0:
-            return None
-        if _coded_number(br) is None:
-            return None
-        if bs_code == 0:
-            return None
-        if bs_code == 1:
-            blocksize = 192
-        elif 2 <= bs_code <= 5:
-            blocksize = 576 << (bs_code - 2)
-        elif bs_code == 6:
-            v = br.read(8)
-            if v is None:
+            start = br.pos
+            if br.read(14) != 0x3FFE:
+                # frames end where the sync pattern stops: trailing
+                # bytes after at least one good frame are tolerated
+                # (CRCs are not validated either — structural
+                # strictness only), a stream with no leading frame is
+                # refused
+                if got:
+                    break
                 return None
-            blocksize = v + 1
-        elif bs_code == 7:
-            v = br.read(16)
-            if v is None:
+            if br.read1() != 0:  # reserved
                 return None
-            blocksize = v + 1
-        else:
-            blocksize = 256 << (bs_code - 8)
-        if sr_code == 0:
-            rate = rate0
-        elif sr_code in _RATE_CODES:
-            rate = _RATE_CODES[sr_code]
-        elif sr_code == 12:
-            v = br.read(8)
-            if v is None:
+            br.read1()  # blocking strategy
+            bs_code = br.read(4)
+            sr_code = br.read(4)
+            ch_code = br.read(4)
+            ss_code = br.read(3)
+            if br.read1() != 0:
                 return None
-            rate = v * 1000
-        elif sr_code == 13:
-            v = br.read(16)
-            if v is None:
+            if _coded_number(br) is None:
                 return None
-            rate = v
-        elif sr_code == 14:
-            v = br.read(16)
-            if v is None:
+            if bs_code == 0:
                 return None
-            rate = v * 10
-        else:
-            return None
-        bps = bps0 if ss_code == 0 else _SIZE_CODES.get(ss_code)
-        if bps is None:
-            return None
-        if br.read(8) is None:  # header CRC-8 (not validated)
-            return None
+            if bs_code == 1:
+                blocksize = 192
+            elif 2 <= bs_code <= 5:
+                blocksize = 576 << (bs_code - 2)
+            elif bs_code == 6:
+                blocksize = br.read(8) + 1
+            elif bs_code == 7:
+                blocksize = br.read(16) + 1
+            else:
+                blocksize = 256 << (bs_code - 8)
+            if sr_code == 0:
+                rate = rate0
+            elif sr_code in _RATE_CODES:
+                rate = _RATE_CODES[sr_code]
+            elif sr_code == 12:
+                rate = br.read(8) * 1000
+            elif sr_code == 13:
+                rate = br.read(16)
+            elif sr_code == 14:
+                rate = br.read(16) * 10
+            else:
+                return None
+            bps = bps0 if ss_code == 0 else _SIZE_CODES.get(ss_code)
+            if bps is None:
+                return None
+            br.read(8)  # header CRC-8 (not validated)
 
-        if ch_code <= 7:
-            nch = ch_code + 1
-            if nch != nch0:
-                return None
-            subs = []
-            for _c in range(nch):
-                s = _subframe(br, blocksize, bps)
-                if s is None:
+            if ch_code <= 7:
+                nch = ch_code + 1
+                if nch != nch0:
                     return None
-                subs.append(s)
-        elif ch_code in (8, 9, 10):
-            if nch0 != 2:
+                subs = []
+                for _c in range(nch):
+                    s = _subframe(br, blocksize, bps)
+                    if s is None:
+                        return None
+                    subs.append(s)
+            elif ch_code in (8, 9, 10):
+                if nch0 != 2:
+                    return None
+                # side channel gets one extra bit (spec 9.1.4)
+                extra0 = 1 if ch_code == 9 else 0  # right/side: ch0 side
+                extra1 = 1 if ch_code in (8, 10) else 0
+                c0 = _subframe(br, blocksize, bps + extra0)
+                if c0 is None:
+                    return None
+                c1 = _subframe(br, blocksize, bps + extra1)
+                if c1 is None:
+                    return None
+                if ch_code == 8:  # left/side: right = left - side
+                    subs = [c0, c0 - c1]
+                elif ch_code == 9:  # right/side: left = side + right
+                    subs = [c0 + c1, c1]
+                else:  # mid/side
+                    mid, side = c0, c1
+                    m2 = (mid << 1) | (side & 1)
+                    subs = [(m2 + side) >> 1, (m2 - side) >> 1]
+            else:
                 return None
-            # side channel gets one extra bit (spec 9.1.4)
-            extra0 = 1 if ch_code == 9 else 0  # right/side: ch0 is side
-            extra1 = 1 if ch_code in (8, 10) else 0
-            c0 = _subframe(br, blocksize, bps + extra0)
-            if c0 is None:
-                return None
-            c1 = _subframe(br, blocksize, bps + extra1)
-            if c1 is None:
-                return None
-            if ch_code == 8:  # left/side: right = left - side
-                subs = [c0, c0 - c1]
-            elif ch_code == 9:  # right/side: left = side + right
-                subs = [c0 + c1, c1]
-            else:  # mid/side
-                mid, side = c0, c1
-                m2 = (mid << 1) | (side & 1)
-                subs = [(m2 + side) >> 1, (m2 - side) >> 1]
-        else:
-            return None
-        br.align()
-        if br.read(16) is None:  # frame CRC-16 (not validated)
-            return None
-        if br.pos <= start:
-            return None  # no forward progress: malformed
-        take = blocksize
-        if total is not None and got + take > total:
-            take = total - got
-        for c in range(nch0):
-            chans[c].append(subs[c][:take])
-        got += take
+            br.align()
+            br.read(16)  # frame CRC-16 (not validated)
+            if br.pos <= start:
+                return None  # no forward progress: malformed
+            take = blocksize
+            if total is not None and got + take > total:
+                take = total - got
+            for c in range(nch0):
+                chans[c].append(subs[c][:take])
+            got += take
+    except BitOverrun:
+        return None
     if got == 0:
         return None
     return (rate, bps0, [np.concatenate(c) for c in chans])

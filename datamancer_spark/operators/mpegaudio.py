@@ -55,6 +55,12 @@ reorder, alias reduction, IMDCT windows) follows the public ISO/IEC
 INDEPENDENT test-side encoder in ``tests/mpeg_encoder.py`` (the same
 pattern as the JPEG/PNG/FLAC codecs in this package).
 
+Overrun policy: every field is read through ``bitreader.BitReaderMSB``.
+A read past the end of a frame (or of a Layer III main-data window)
+raises ``BitOverrun``, and ``mpeg_audio_decode_array`` returns ``None``
+for the clip, the same all-or-nothing answer as any other undecodable
+frame — a corrupt blob never surfaces as an exception.
+
 The reference engine has no audio decode at all — this is
 beyond-reference LLM-pipeline surface.
 """
@@ -63,6 +69,8 @@ from __future__ import annotations
 
 import math
 import struct
+
+from .bitreader import BitOverrun, BitReaderMSB
 
 _SAMPLERATES = (44100, 48000, 32000)
 _BITRATES_L1 = (0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352,
@@ -108,34 +116,6 @@ def parse_frame_header(b: bytes, pos: int = 0):
         "frame_bytes": frame_bytes,
         "channels": 1 if (h3 >> 6) == 3 else 2,
     }
-
-
-class _Bits:
-    """MSB-first bit reader."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes, bitpos: int = 0):
-        self.data = data
-        self.pos = bitpos
-
-    def read(self, n: int) -> int:
-        v = 0
-        d = self.data
-        p = self.pos
-        for _ in range(n):
-            v = (v << 1) | ((d[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        self.pos = p
-        return v
-
-    def read1(self) -> int:
-        p = self.pos
-        self.pos = p + 1
-        return (self.data[p >> 3] >> (7 - (p & 7))) & 1
-
-    def bits_left(self) -> int:
-        return len(self.data) * 8 - self.pos
 
 
 # -- polyphase filterbank ----------------------------------------------------
@@ -284,7 +264,7 @@ def analysis(pcm):
 _SCALEFACTORS = [2.0 * 2.0 ** (-i / 3.0) for i in range(63)] + [1e-20]
 
 
-def _layer1_frame(bits: _Bits, hdr):
+def _layer1_frame(bits: BitReaderMSB, hdr):
     """Decode one Layer I frame body -> (nch, 384) float list-of-lists
     of subband sample vectors [(ch, sb) -> 12 samples], or None."""
     nch = hdr["channels"]
@@ -438,7 +418,7 @@ def _is7_segments(g, rate: int, sf_long, sf_short, bound: int):
 def _parse_side_info(data: bytes, nch: int):
     """Side info (17 bytes mono / 32 stereo) -> (main_data_begin,
     scfsi[ch][4], granules[2][ch] dicts) or None on reserved values."""
-    bits = _Bits(data)
+    bits = BitReaderMSB(data)
     main_data_begin = bits.read(9)
     bits.read(5 if nch == 1 else 3)  # private bits
     scfsi = [[bits.read1() for _ in range(4)] for _ in range(nch)]
@@ -483,7 +463,7 @@ def _parse_side_info(data: bytes, nch: int):
     return main_data_begin, scfsi, granules
 
 
-def _read_scalefactors(bits: _Bits, g, scfsi_ch, prev):
+def _read_scalefactors(bits: BitReaderMSB, g, scfsi_ch, prev):
     """-> (sf_long[21], sf_short[12][3], part2_bits). ``prev`` is
     granule 0's long scalefactors for scfsi reuse (granule 1 only)."""
     slen1, slen2 = _SLEN[g["scalefac_compress"]]
@@ -518,7 +498,7 @@ def _read_scalefactors(bits: _Bits, g, scfsi_ch, prev):
     return sf_long, None, bits.pos - start
 
 
-def _huffman_region(bits: _Bits, select: int, count: int, out, idx,
+def _huffman_region(bits: BitReaderMSB, select: int, count: int, out, idx,
                     limit: int):
     """Decode ``count`` PAIRS from a big_values region. Returns new idx
     or None (unsupported table / desync)."""
@@ -567,7 +547,7 @@ def _huffman_region(bits: _Bits, select: int, count: int, out, idx,
     return idx
 
 
-def _count1_region(bits: _Bits, select: int, out, idx, limit: int):
+def _count1_region(bits: BitReaderMSB, select: int, out, idx, limit: int):
     """Decode count1 quadruples until the bit budget is exhausted."""
     from .mpeghuff import COUNT1_TABLES
 
@@ -800,7 +780,7 @@ class _L3Decoder:
             + new_main
         )
         self.reservoir = (self.reservoir + new_main)[-511:]
-        bits = _Bits(data)
+        bits = BitReaderMSB(data)
         ms = hdr["mode"] == 1 and (hdr["mode_ext"] & 2)
         intensity = hdr["mode"] == 1 and (hdr["mode_ext"] & 1)
         for gr in range(2):
@@ -1000,17 +980,18 @@ def mpeg_audio_decode_array(blob: bytes):
         frame = data[pos : pos + fb]
         if len(frame) < fb:
             break  # truncated final frame
-        if layer == 1:
-            off = 4 + (2 if hdr["protection"] else 0)
-            bits = _Bits(frame, off * 8)
-            got = _layer1_frame(bits, hdr)
-            if got is None:
+        try:
+            if layer == 1:
+                off = 4 + (2 if hdr["protection"] else 0)
+                got = _layer1_frame(BitReaderMSB(frame, off * 8), hdr)
+                if got is None:
+                    return None
+                for ch in range(nch):
+                    l1_sb[ch].append(got[ch])
+            elif not l3.feed(frame, hdr):
                 return None
-            for ch in range(nch):
-                l1_sb[ch].append(got[ch])
-        else:
-            if not l3.feed(frame, hdr):
-                return None
+        except BitOverrun:
+            return None
         frames += 1
         pos += fb
     if frames == 0:

@@ -27,6 +27,8 @@ from __future__ import annotations
 import math
 import struct
 
+from .bitreader import BitOverrun, BitReaderLSB
+
 # ---------------------------------------------------------------------------
 # Ogg container layer
 # ---------------------------------------------------------------------------
@@ -99,43 +101,6 @@ def ogg_packets(blob: bytes, max_bytes: int | None = None):
         pos = page_end
 
 
-# ---------------------------------------------------------------------------
-# Bit layer (Vorbis packs LSB-first — opposite of the MPEG tier)
-# ---------------------------------------------------------------------------
-
-
-class EndOfPacket(Exception):
-    pass
-
-
-class _BitsLSB:
-    __slots__ = ("data", "pos", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.nbits = 8 * len(data)
-
-    def read(self, n: int) -> int:
-        if self.pos + n > self.nbits:
-            raise EndOfPacket
-        v = 0
-        p = self.pos
-        d = self.data
-        for i in range(n):
-            v |= ((d[p >> 3] >> (p & 7)) & 1) << i
-            p += 1
-        self.pos = p
-        return v
-
-    def read1(self) -> int:
-        if self.pos >= self.nbits:
-            raise EndOfPacket
-        b = (self.data[self.pos >> 3] >> (self.pos & 7)) & 1
-        self.pos += 1
-        return b
-
-
 def _ilog(x: int) -> int:
     """Vorbis ilog: position of highest set bit (ilog(0)=0, ilog(1)=1)."""
     n = 0
@@ -178,7 +143,7 @@ class _Codebook:
         self.vq = None  # list of per-entry float vectors, or None
         self.single = None  # single-used-entry special case
 
-    def decode_scalar(self, bits: _BitsLSB) -> int:
+    def decode_scalar(self, bits: BitReaderLSB) -> int:
         if self.single is not None:
             # security-errata special case: a one-entry codebook decodes
             # by reading zero bits
@@ -191,9 +156,9 @@ class _Codebook:
             e = self.dec.get((ln, acc))
             if e is not None:
                 return e
-        raise EndOfPacket  # invalid codeword == undecodable stream
+        raise BitOverrun  # invalid codeword: read as end of packet
 
-    def decode_vq(self, bits: _BitsLSB):
+    def decode_vq(self, bits: BitReaderLSB):
         e = self.decode_scalar(bits)
         return self.vq[e]
 
@@ -225,7 +190,7 @@ def _assign_codewords(used):
     return dec
 
 
-def _read_codebook(bits: _BitsLSB) -> _Codebook:
+def _read_codebook(bits: BitReaderLSB) -> _Codebook:
     if bits.read(24) != 0x564342:  # 'BCV'
         raise ValueError("bad codebook sync")
     cb = _Codebook()
@@ -322,7 +287,7 @@ _INVERSE_DB_TABLE = [
 _FLOOR1_RANGES = {1: 256, 2: 128, 3: 86, 4: 64}
 
 
-def _read_floor1_config(bits: _BitsLSB):
+def _read_floor1_config(bits: BitReaderLSB):
     f = {}
     partitions = bits.read(5)
     class_list = [bits.read(4) for _ in range(partitions)]
@@ -384,7 +349,7 @@ def _render_line(x0, y0, x1, y1, out, n):
         out[x] = y
 
 
-def _decode_floor1(bits: _BitsLSB, f, books, n_half):
+def _decode_floor1(bits: BitReaderLSB, f, books, n_half):
     """Returns the floor curve (length n_half) or None (unvoiced)."""
     if not bits.read1():
         return None
@@ -471,7 +436,7 @@ def _decode_floor1(bits: _BitsLSB, f, books, n_half):
 # ---------------------------------------------------------------------------
 
 
-def _read_residue_config(bits: _BitsLSB):
+def _read_residue_config(bits: BitReaderLSB):
     r = {"type": bits.read(16)}
     if r["type"] > 2:
         raise ValueError(f"reserved residue type {r['type']}")
@@ -496,7 +461,7 @@ def _read_residue_config(bits: _BitsLSB):
     return r
 
 
-def _decode_residue(bits: _BitsLSB, r, books, ch_vectors, do_not_decode):
+def _decode_residue(bits: BitReaderLSB, r, books, ch_vectors, do_not_decode):
     """Decode into ch_vectors (list of float lists, len n_half each).
     Residue 2 treats all channels as one interleaved vector."""
     n = len(ch_vectors[0])
@@ -539,7 +504,7 @@ def _decode_residue_core(bits, r, books, vectors, do_not_decode):
                         continue
                     try:
                         temp = classbook.decode_scalar(bits)
-                    except EndOfPacket:
+                    except BitOverrun:
                         return
                     for i in range(cpc - 1, -1, -1):
                         if pi + i < parts:
@@ -561,7 +526,7 @@ def _decode_residue_core(bits, r, books, vectors, do_not_decode):
                         _residue_partition(
                             bits, book, vectors[v], off, psize, fmt0
                         )
-                    except EndOfPacket:
+                    except BitOverrun:
                         return
                 pi += 1
 
@@ -609,7 +574,7 @@ def _parse_ident(pkt: bytes):
 def _parse_setup(pkt: bytes, channels: int):
     if pkt[:7] != b"\x05vorbis":
         return None
-    bits = _BitsLSB(pkt[7:])
+    bits = BitReaderLSB(pkt[7:])
     books = [_read_codebook(bits) for _ in range(bits.read(8) + 1)]
     for _ in range(bits.read(6) + 1):  # time domain transforms (all 0)
         if bits.read(16) != 0:
@@ -747,7 +712,7 @@ def vorbis_decode_array(blob: bytes, max_samples: int | None = None):
         setup = _parse_setup(setup_pkt[0], ident["channels"])
         if setup is None:
             return None
-    except (ValueError, EndOfPacket, IndexError, struct.error):
+    except (ValueError, BitOverrun, IndexError, struct.error):
         return None
 
     ch = ident["channels"]
@@ -764,7 +729,7 @@ def vorbis_decode_array(blob: bytes, max_samples: int | None = None):
         for pkt, _granule in pkts:
             if not pkt:
                 continue
-            bits = _BitsLSB(pkt)
+            bits = BitReaderLSB(pkt)
             try:
                 if bits.read1() != 0:
                     continue  # not an audio packet
@@ -785,7 +750,7 @@ def vorbis_decode_array(blob: bytes, max_samples: int | None = None):
                     fl = setup["floors"][mapping["submap_floor"][sm]]
                     try:
                         curve = _decode_floor1(bits, fl, books, n_half)
-                    except EndOfPacket:
+                    except BitOverrun:
                         curve = None
                     floors.append(curve)
                     no_residue.append(curve is None)
@@ -856,7 +821,7 @@ def vorbis_decode_array(blob: bytes, max_samples: int | None = None):
                 prev_n = n
                 if max_samples is not None and total >= max_samples:
                     break
-            except EndOfPacket:
+            except BitOverrun:
                 continue  # truncated audio packet: skip, keep stream
     except (ValueError, IndexError, struct.error):
         return None
@@ -886,5 +851,5 @@ def vorbis_stream_supported(blob: bytes) -> bool:
         if comment[0][:7] != b"\x03vorbis":
             return False
         return _parse_setup(setup_pkt[0], ident["channels"]) is not None
-    except (ValueError, EndOfPacket, IndexError, struct.error):
+    except (ValueError, BitOverrun, IndexError, struct.error):
         return False

@@ -63,42 +63,15 @@ import struct
 
 import numpy as np
 
+from .bitreader import BitOverrun, BitReaderLSB
+
 
 class _Refuse(Exception):
     """Structurally valid stream using a refused feature."""
 
 
 class _Bad(Exception):
-    """Malformed/truncated stream."""
-
-
-class _Bits:
-    """LSB-first bit reader over bytes (VP8L convention)."""
-
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def read(self, k: int) -> int:
-        p = self.pos
-        if p + k > self.n:
-            raise _Bad("bitstream overrun")
-        v = 0
-        data = self.data
-        for i in range(k):
-            v |= ((data[(p + i) >> 3] >> ((p + i) & 7)) & 1) << i
-        self.pos = p + k
-        return v
-
-    def read1(self) -> int:
-        p = self.pos
-        if p >= self.n:
-            raise _Bad("bitstream overrun")
-        self.pos = p + 1
-        return (self.data[p >> 3] >> (p & 7)) & 1
+    """Malformed stream (a truncated one raises ``BitOverrun``)."""
 
 
 #: order in which code-length-code lengths are transmitted (spec table)
@@ -140,7 +113,7 @@ def _canonical_tree(lengths):
     return ("tree", tree)
 
 
-def _read_symbol(bits: _Bits, tree) -> int:
+def _read_symbol(bits: BitReaderLSB, tree) -> int:
     if tree[0] == "single":
         return tree[1]
     t = tree[1]
@@ -155,7 +128,7 @@ def _read_symbol(bits: _Bits, tree) -> int:
         return v
 
 
-def _read_prefix_code(bits: _Bits, alphabet_size: int):
+def _read_prefix_code(bits: BitReaderLSB, alphabet_size: int):
     """One prefix code: simple (1-2 symbols) or normal (code-length
     coded lengths)."""
     if bits.read1():  # simple
@@ -216,7 +189,7 @@ def _read_prefix_code(bits: _Bits, alphabet_size: int):
     return _canonical_tree(lengths)
 
 
-def _prefix_value(bits: _Bits, code: int) -> int:
+def _prefix_value(bits: BitReaderLSB, code: int) -> int:
     """LZ77 length/distance prefix decoding (shared algorithmic rule:
     code < 4 -> code+1, else offset + extra bits)."""
     if code < 4:
@@ -230,7 +203,7 @@ def _div_round_up(a: int, b: int) -> int:
     return (a + b - 1) // b
 
 
-def _read_group(bits: _Bits, cache_bits: int):
+def _read_group(bits: BitReaderLSB, cache_bits: int):
     """The 5 prefix codes of one meta group."""
     g = _read_prefix_code(bits, 256 + 24 + (1 << cache_bits if cache_bits else 0))
     r = _read_prefix_code(bits, 256)
@@ -240,7 +213,7 @@ def _read_group(bits: _Bits, cache_bits: int):
     return (g, r, b, a, d)
 
 
-def _decode_pixels(bits: _Bits, w: int, h: int, toplevel: bool):
+def _decode_pixels(bits: BitReaderLSB, w: int, h: int, toplevel: bool):
     """Entropy-coded ARGB image (spec 'spatially coded image' when
     toplevel): returns np.uint32 array (h*w,) in A<<24|R<<16|G<<8|B
     order. Sub-images (entropy/transform/palette) use toplevel=False
@@ -525,7 +498,7 @@ def vp8l_decode_array(blob: bytes, dry_run: bool = False):
         payload = _find_vp8l_payload(blob)
         if payload is None or len(payload) < 5 or payload[0] != 0x2F:
             return None
-        bits = _Bits(payload[1:])
+        bits = BitReaderLSB(payload[1:])
         w = bits.read(14) + 1
         h = bits.read(14) + 1
         bits.read1()  # alpha hint
@@ -610,7 +583,8 @@ def vp8l_decode_array(blob: bytes, dry_run: bool = False):
         rgb[:, :, 1] = (argb >> 8) & 0xFF
         rgb[:, :, 2] = argb & 0xFF
         return (w, h, 3, rgb)
-    except (_Refuse, _Bad, ValueError, IndexError, OverflowError):
+    except (_Refuse, _Bad, BitOverrun, ValueError, IndexError,
+            OverflowError):
         return None
 
 

@@ -622,17 +622,31 @@ class TestRefusals:
             mpeg_audio_decode_array,
             mpeg_stream_supported,
         )
-        from mpeg_encoder import encode_layer3
+        from mpeg_encoder import encode_layer1, encode_layer3
 
         sig = _bl_noise(22050, 33)
-        blob = bytearray(encode_layer3([sig], 44100))
-        rng = np.random.default_rng(99)
-        for _ in range(40):
-            mut = bytearray(blob)
-            for _k in range(rng.integers(1, 8)):
-                mut[rng.integers(0, len(mut))] = rng.integers(0, 256)
-            mpeg_audio_decode_array(bytes(mut))  # None or decode
-            mpeg_stream_supported(bytes(mut))
+        for blob in (encode_layer3([sig], 44100), encode_layer1([sig], 44100)):
+            rng = np.random.default_rng(99)
+            for _ in range(40):
+                mut = bytearray(blob)
+                for _k in range(rng.integers(1, 8)):
+                    mut[rng.integers(0, len(mut))] = rng.integers(0, 256)
+                mpeg_audio_decode_array(bytes(mut))  # None or decode
+                mpeg_stream_supported(bytes(mut))
+
+    def test_layer1_allocation_overrun_is_undecodable(self):
+        """Allocation codes 14 everywhere ask for 15-bit samples in all
+        32 subbands — far more bits than the frame holds. The read past
+        the frame end makes the clip undecodable (``None``), never an
+        exception out of the decoder."""
+        from datamancer_spark.operators.mpegaudio import (
+            mpeg_audio_decode_array,
+        )
+        from mpeg_encoder import encode_layer1
+
+        blob = bytearray(encode_layer1([_bl_noise(22050, 33)], 44100))
+        blob[4:20] = b"\xee" * 16  # first frame's allocation, no CRC
+        assert mpeg_audio_decode_array(bytes(blob)) is None
 
 
 class TestHeaders:

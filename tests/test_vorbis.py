@@ -19,10 +19,9 @@ from vorbis_encoder import (
     ogg_page,
 )
 
+from datamancer_spark.operators.bitreader import BitReaderLSB
 from datamancer_spark.operators.vorbiscodec import (
-    EndOfPacket,
     _assign_codewords,
-    _BitsLSB,
     _float32_unpack,
     _imdct,
     _lookup1_values,
@@ -237,7 +236,7 @@ class TestCodebookMachinery:
     def _book_bits(self, write):
         w = BitWriterLSB()
         write(w)
-        return _BitsLSB(w.tobytes())
+        return BitReaderLSB(w.tobytes())
 
     def test_sparse_codebook(self):
         def write(w):
@@ -289,7 +288,7 @@ class TestCodebookMachinery:
             w.write(0, 4)
 
         cb = _read_codebook(self._book_bits(write))
-        bits = _BitsLSB(b"")
+        bits = BitReaderLSB(b"")
         assert cb.decode_scalar(bits) == 1  # zero bits consumed
 
     def test_assign_codewords_canonical(self):

@@ -62,7 +62,7 @@ def _pcm(n_clips, seconds=1.0, rate=8000, seed=9):
 
 
 def build_corpora(n_img=24, n_clip=12):
-    from mpeg_encoder import encode_layer3
+    from mpeg_encoder import encode_layer1, encode_layer3
     from test_flac import encode_flac
     from test_jpeg import encode_jpeg, encode_jpeg_progressive
 
@@ -89,6 +89,9 @@ def build_corpora(n_img=24, n_clip=12):
         "mp3_l3_ws": [
             encode_layer3([x], 44100, block_types=[0, 1, 3, 0]) for x in mp3_pcm
         ],
+        # Layer I: 384-sample frames, the path with the bounds-checked
+        # allocation/sample reads
+        "mp3_l1": [encode_layer1([x], 44100) for x in mp3_pcm],
         "ogg_vorbis_1s": _vorbis_clips(pcm),
         "tiff_lzw_128": _tiff_imgs(imgs),
         "webp_vp8l_128": _webp_imgs(imgs),
@@ -131,6 +134,7 @@ def main():
         "wav_pcm16_1s": audio_decode_array,
         "flac_16b_1s": audio_decode_array,
         "mp3_l3_ws": audio_decode_array,
+        "mp3_l1": audio_decode_array,
         "ogg_vorbis_1s": audio_decode_array,
         "tiff_lzw_128": _decode_gray,
         "webp_vp8l_128": _decode_rgb,
